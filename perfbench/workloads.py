@@ -355,13 +355,6 @@ class Workload:
     #: input rows one run processes (turns; docs for curation)
     rows_key = "n_source"
 
-    def __init__(self, scale: float = 1.0):
-        #: input size relative to the benchmarked one (warm-up inputs)
-        self.scale = scale
-
-    def size(self, n: int) -> int:
-        return max(64, int(n * self.scale))
-
     def generate(self, seed: int, data: str) -> dict:
         """Write the seeded inputs and their truth file; return the truth."""
         raise NotImplementedError
@@ -405,7 +398,7 @@ class RowFull(Workload):
 
     def generate(self, seed, data):
         return gen.row_tables(
-            seed, self.size(self.n_convs), N_PARTS, self.dirty_parts, data
+            seed, self.n_convs, N_PARTS, self.dirty_parts, data
         )
 
     def expect(self, data):
@@ -453,7 +446,7 @@ class ColumnDrift(Workload):
     n_convs = 1200
 
     def generate(self, seed, data):
-        return gen.drift_tables(seed, self.size(self.n_convs), data)
+        return gen.drift_tables(seed, self.n_convs, data)
 
     def expect(self, data):
         self.exp = oracle.DriftExpect(data, KS_FLAG, UNIQ_BUCKETS)
@@ -471,7 +464,7 @@ class CurateDedup(Workload):
     n_base = 3000
 
     def generate(self, seed, data):
-        return gen.corpus(seed, self.size(self.n_base), data)
+        return gen.corpus(seed, self.n_base, data)
 
     def expect(self, data):
         self.exp = oracle.CurateExpect(data, QUALITY_MIN)
