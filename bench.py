@@ -108,6 +108,45 @@ TRAINING_BENCH = [
 ]
 
 
+def session_conf(master: str) -> dict:
+    """Harness-only session conf, passed to get_spark as ``extra_conf``.
+
+    - local-cluster[k,c,m] (the multi-executor emulation of the N-vs-4N
+      protocol): size each executor JVM explicitly
+      ($SPARK_GRAFT_EXECUTOR_MEM, default 8g) with ParallelGC. Round-5
+      measurement: a SINGLE local[16] JVM under-scales map stages 3x
+      per-task vs 4 tasks (host-level effect on one process; GC pauses
+      0.5 s, bandwidth 28 GB/s available, stack samples all RUNNABLE in
+      codegen), while 4 separate 4-core executor JVMs on the same 16
+      pinned cores run the same stage 2.9x faster.
+    - AQE initialPartitionNum=256 at corpus scale (replication >= 100x,
+      or $SPARK_GRAFT_INITIAL_PARTS). At 5M docs the MinHash aggregate
+      (~265M shingle rows) at cores-many initial partitions divides
+      executor memory across cores-many concurrent 8M-row hash maps and
+      spills — measured as the 16-core leg LOSING per-core throughput vs
+      the 4-core leg; a 256-wide start bounds per-task state and AQE
+      coalesces small shuffles back down. The wide start is NOT free for
+      sub-second queries: at sf0.1 a 3-row-result chained aggregate
+      (mutual_info_lang_source) pays 2.1x in 256-task stage waves, so the
+      x10 default replication stays at the session's shuffle width.
+    """
+    conf = {}
+    if master.startswith("local-cluster"):
+        conf["spark.executor.memory"] = os.environ.get(
+            "SPARK_GRAFT_EXECUTOR_MEM", "8g"
+        )
+        conf["spark.executor.extraJavaOptions"] = "-XX:+UseParallelGC"
+    ipn = os.environ.get("SPARK_GRAFT_INITIAL_PARTS")
+    if ipn is None and (
+        int(os.environ.get("SPARK_GRAFT_REPLICATE_DOCS", "1")) >= 100
+        or int(os.environ.get("SPARK_GRAFT_REPLICATE", "1")) >= 100
+    ):
+        ipn = "256"
+    if ipn:
+        conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = ipn
+    return conf
+
+
 def run_suite(
     master: str, sf_dir: str, replicate: int = 1, only: str | None = None
 ) -> tuple[dict, float, int]:
@@ -117,7 +156,9 @@ def run_suite(
 
     if replicate > 1:
         os.environ["SPARK_GRAFT_REPLICATE"] = str(replicate)
-    spark = get_spark("psdv-bench", master=master)
+    spark = get_spark(
+        "psdv-bench", master=master, extra_conf=session_conf(master)
+    )
     # bench variants: identical plans minus the contract-only global orderBy
     # (the driver's oracle comparison needs determinism; production writes
     # violations partitioned — and orderBy's range sampling re-executes the

@@ -1,12 +1,14 @@
 #!/bin/sh
 # Build the --py-files artifact for spark-submit.
+#   sh package.sh [OUT]    OUT defaults to dist/psdv_spark.zip
 set -e
+out="$(realpath -m "${1:-$(dirname "$0")/dist/psdv_spark.zip}")"
 cd "$(dirname "$0")"
-mkdir -p dist
-rm -f dist/psdv_spark.zip
+mkdir -p "$(dirname "$out")"
+rm -f "$out"
 python -c "
-import zipfile, os
-with zipfile.ZipFile('dist/psdv_spark.zip', 'w', zipfile.ZIP_DEFLATED) as z:
+import zipfile, os, sys
+with zipfile.ZipFile(sys.argv[1], 'w', zipfile.ZIP_DEFLATED) as z:
     for root, _, files in os.walk('professional_services_data_validator_spark'):
         if '__pycache__' in root:
             continue
@@ -14,5 +16,5 @@ with zipfile.ZipFile('dist/psdv_spark.zip', 'w', zipfile.ZIP_DEFLATED) as z:
             if f.endswith('.py'):
                 p = os.path.join(root, f)
                 z.write(p, p)
-print('dist/psdv_spark.zip written')
-"
+print(sys.argv[1], 'written')
+" "$out"

@@ -18,6 +18,8 @@ Scale notes (10^12-row posture):
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -305,6 +307,8 @@ def jaccard_verify(
     for executor-loss recoverability — the same guidance as
     :func:`connected_components`.
     """
+    if sh is None and sh_slicer is None:
+        raise ValueError("provide sh or sh_slicer")
     _ckpt = (
         (lambda d: d.checkpoint())
         if reliable_checkpoint
@@ -560,6 +564,35 @@ def _loop_partitions(spark, n_edges: int, sess_parts: int) -> int:
     return max(1, min(sess_parts, max(lo, fill_cores)))
 
 
+_IPN = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+
+@contextmanager
+def _loop_width(spark, n_edges: int):
+    """Run the body of an iterative CC loop at the edge-sized shuffle width
+    of :func:`_loop_partitions`, restoring the session conf afterwards, on
+    error too.
+
+    AQE's initialPartitionNum, when deploy conf (or a harness's
+    ``extra_conf``) sets it, overrides shuffle.partitions as the starting
+    width of every AQE shuffle, so it is pinned to the loop width as well;
+    otherwise each round would schedule e.g. 256-wide near-empty waves.
+    """
+    sess_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    sess_ipn = spark.conf.get(_IPN, None)
+    loop_parts = str(_loop_partitions(spark, n_edges, int(sess_parts)))
+    spark.conf.set("spark.sql.shuffle.partitions", loop_parts)
+    spark.conf.set(_IPN, loop_parts)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", sess_parts)
+        if sess_ipn is None:
+            spark.conf.unset(_IPN)
+        else:
+            spark.conf.set(_IPN, sess_ipn)
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
@@ -624,70 +657,56 @@ def connected_components(
     # (most docs are singletons), so iterating with the corpus-sized
     # partition count schedules dozens of near-empty tasks per round —
     # per-round fixed cost is exactly the serial fraction that caps this
-    # iterative job's N->4N scaling. ~100k edge rows per partition keeps
-    # tasks long enough to amortize dispatch; the session value is
-    # restored before returning (the output plan is compiled after).
-    spark = pairs.sparkSession
+    # iterative job's N->4N scaling. The session value is restored before
+    # returning (the output plan is compiled after).
     n_edges = edges.count()  # cached — also materializes the persist
-    sess_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = _loop_partitions(spark, n_edges, int(sess_parts))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    # AQE's coalescePartitions.initialPartitionNum (set session-wide to
-    # 256 for corpus-scale aggregates) OVERRIDES shuffle.partitions as the
-    # starting width of every AQE shuffle — without pinning it too, the
-    # loop's edge-sized partitioning above never takes effect and each
-    # round schedules 256-wide near-empty task waves.
-    _IPN = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    sess_ipn = spark.conf.get(_IPN, None)
-    spark.conf.set(_IPN, str(loop_parts))
     try:
-        # round-0 fold: start from min(own id, min neighbor id) — one
-        # aggregate over the (already symmetric) edge list replaces a whole
-        # propagation round, so near-clique dup groups usually converge in
-        # 1-2 loop rounds. least(id, min(dst)) folds the own-id term in
-        # closed form instead of unioning a distinct'd self-edge frame (one
-        # O(E) shuffle saved).
-        labels = (
-            edges.groupBy(F.col("src").alias("id"))
-            .agg(F.min("dst").alias("__m"))
-            .select("id", F.least(F.col("id"), F.col("__m")).alias("lbl"))
-            .localCheckpoint()
-        )
-        converged = False
-        for _ in range(max_iter):
-            # ONE shuffle chain per round: the old label rides the same
-            # aggregate as the neighbor messages (min(old) is exact — each
-            # id has exactly one base row), so convergence is a joinless
-            # filter over the checkpointed result instead of a second O(V)
-            # shuffle join per round. By edge symmetry every msg id already
-            # has a base row, so old is never NULL.
-            msgs = edges.join(
-                labels.select(F.col("id").alias("src"), "lbl"), "src"
-            ).select(
-                F.col("dst").alias("id"),
-                "lbl",
-                F.lit(None).cast(labels.schema["lbl"].dataType).alias("old"),
-            )
-            base = labels.select("id", "lbl", F.col("lbl").alias("old"))
-            new = (
-                base.unionByName(msgs)
-                .groupBy("id")
-                .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old"))
+        with _loop_width(pairs.sparkSession, n_edges):
+            # round-0 fold: start from min(own id, min neighbor id) — one
+            # aggregate over the (already symmetric) edge list replaces a
+            # whole propagation round, so near-clique dup groups usually
+            # converge in 1-2 loop rounds. least(id, min(dst)) folds the
+            # own-id term in closed form instead of unioning a distinct'd
+            # self-edge frame (one O(E) shuffle saved).
+            labels = (
+                edges.groupBy(F.col("src").alias("id"))
+                .agg(F.min("dst").alias("__m"))
+                .select(
+                    "id", F.least(F.col("id"), F.col("__m")).alias("lbl")
+                )
                 .localCheckpoint()
             )
-            shrank = (
-                new.filter(F.col("lbl") < F.col("old")).limit(1).count()
-            )
-            labels = new.select("id", "lbl")
-            if shrank == 0:
-                converged = True
-                break
+            converged = False
+            lbl_type = labels.schema["lbl"].dataType
+            for _ in range(max_iter):
+                # ONE shuffle chain per round: the old label rides the same
+                # aggregate as the neighbor messages (min(old) is exact —
+                # each id has exactly one base row), so convergence is a
+                # joinless filter over the checkpointed result instead of a
+                # second O(V) shuffle join per round. By edge symmetry every
+                # msg id already has a base row, so old is never NULL.
+                msgs = edges.join(
+                    labels.select(F.col("id").alias("src"), "lbl"), "src"
+                ).select(
+                    F.col("dst").alias("id"),
+                    "lbl",
+                    F.lit(None).cast(lbl_type).alias("old"),
+                )
+                base = labels.select("id", "lbl", F.col("lbl").alias("old"))
+                new = (
+                    base.unionByName(msgs)
+                    .groupBy("id")
+                    .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old"))
+                    .localCheckpoint()
+                )
+                shrank = (
+                    new.filter(F.col("lbl") < F.col("old")).limit(1).count()
+                )
+                labels = new.select("id", "lbl")
+                if shrank == 0:
+                    converged = True
+                    break
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", sess_parts)
-        if sess_ipn is None:
-            spark.conf.unset(_IPN)
-        else:
-            spark.conf.set(_IPN, sess_ipn)
         edges.unpersist()
     if not converged:
         raise RuntimeError(
@@ -770,23 +789,12 @@ def connected_components_star(
         return (row["n"], row["h"])
 
     fp = _fingerprint(edges)
-    # loop shuffle partitioning sized to the edge list (same rationale and
-    # restore discipline as connected_components): iterative rounds over a
-    # dup graph orders of magnitude smaller than the corpus must not
-    # schedule corpus-sized near-empty task waves.
-    spark = pairs.sparkSession
-    sess_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = _loop_partitions(spark, fp[0], int(sess_parts))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    # pin AQE's initial shuffle width to the loop size too — the session
-    # initialPartitionNum=256 would otherwise override shuffle.partitions
-    # for every AQE shuffle in the loop (same rationale as
-    # connected_components).
-    _IPN = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    sess_ipn = spark.conf.get(_IPN, None)
-    spark.conf.set(_IPN, str(loop_parts))
+    # loop shuffle partitioning sized to the edge list (same rationale as
+    # connected_components): iterative rounds over a dup graph orders of
+    # magnitude smaller than the corpus must not schedule corpus-sized
+    # near-empty task waves.
     converged = False
-    try:
+    with _loop_width(pairs.sparkSession, fp[0]):
         for _ in range(max_iter):
             # ---- large-star: strictly-larger neighbors hook onto min(N(u)∪{u})
             sym = edges.unionByName(
@@ -830,12 +838,6 @@ def connected_components_star(
                 converged = True
                 break
             fp = new_fp
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", sess_parts)
-        if sess_ipn is None:
-            spark.conf.unset(_IPN)
-        else:
-            spark.conf.set(_IPN, sess_ipn)
     if not converged:
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iter} "

@@ -426,6 +426,11 @@ def kmeans_centroids_local(
     return centers
 
 
+#: largest limit kmeans_centroids_sampled hands TakeOrdered unclamped
+#: (its per-task buffer is then at most 2^19 slots)
+_TAKE_ORDERED_MAX = 1 << 18
+
+
 def kmeans_centroids_sampled(
     corpus: DataFrame,
     n_clusters: int = 10,
@@ -449,12 +454,20 @@ def kmeans_centroids_sampled(
     overhead that dominated the timing. Deterministic and independently
     replayable: the DuckDB oracle re-draws the identical sample (same md5
     order) and calls the same local Lloyd.
+
+    A sample at or above the corpus size returns the whole corpus in md5
+    order. TakeOrdered pre-sizes a ``2 * limit``-slot buffer in every task
+    whatever the partition holds, so a limit above ``_TAKE_ORDERED_MAX`` is
+    first clamped to the row count (one extra count job, only then).
     """
+    limit = sample_size
+    if limit > _TAKE_ORDERED_MAX:
+        limit = min(limit, corpus.count())
     rows = (
         corpus.select(id_col, vec_col)
         .withColumn("__h", F.md5(F.col(id_col).cast("string")))
         .orderBy("__h")
-        .limit(sample_size)
+        .limit(limit)
         .collect()
     )
     return kmeans_centroids_local(

@@ -5,7 +5,13 @@ Scale posture (designed for a 1000-executor cluster, tested on local[N]):
 - UTC session timezone everywhere (the reference forces UTC too:
   reference data_validation/clients.py:95-97).
 - Arrow enabled for the pandas-UDF drift kernels.
-- shuffle partitions default to cluster parallelism; AQE coalesces down.
+- shuffle partitions default to 32 (``DEFAULT_SHUFFLE_PARTITIONS``); AQE
+  coalesces small shuffles down.
+
+The factory decides only what no launcher or machine already knows: the
+master comes from the caller or from spark-submit, and cluster sizing
+(executor memory, AQE initial shuffle width) comes from deploy conf or
+``extra_conf``.
 """
 
 from __future__ import annotations
@@ -14,7 +20,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
+
+
+def _default_driver_mem() -> str:
+    """Half the host's physical memory in whole GiB, within [1g, 20g]; the
+    other half stays free for the Python workers and the OS."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(20, phys // 2**31))}g"
 
 
 def get_spark(
@@ -25,11 +38,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with validation-engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; on a
-    real cluster it comes from spark-submit and this factory only sets conf.
+    ``master`` is set only when passed. Otherwise spark-submit's
+    ``--master`` applies, and under plain ``python`` Spark's own default
+    ``local[*]`` (one task thread per CPU the process may use).
+
+    The driver heap is ``$SPARK_DRIVER_MEM``, by default half the host's
+    physical memory capped at 20g; it takes effect only when this call
+    launches the JVM (spark-submit's ``--driver-memory`` decides otherwise).
+    ``extra_conf`` is applied last and overrides every default here.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     # Python workers (pandas-UDF / mapInPandas kernels) import this package
     # by name from cloudpickled closures; driver sys.path does NOT propagate
     # to them. Exporting the package root on PYTHONPATH before the JVM (and
@@ -42,10 +59,12 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             pkg_root + (os.pathsep + existing if existing else "")
         )
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
+    builder = SparkSession.builder.appName(app_name)
+    if master:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
+        builder.config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -59,17 +78,16 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "64m")
         # local mode: the driver JVM IS the executor. Fixed-size, pre-touched
         # heap: lazy heap growth faults in pages mid-query (kernel time
-        # spikes to 90% on this microVM); pre-touching moves that cost to
-        # session startup. On a real cluster spark-submit overrides these.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "20g"))
+        # spikes to 90% on a microVM); pre-touching moves that cost to
+        # session startup.
+        .config("spark.driver.memory", driver_mem)
         # ParallelGC (round 5): the allocation-heavy codegen stages (shingle
         # explode: 208M short-lived strings/pass) measured 20% faster than
         # G1 at local[16] (40.5 vs 50.1 s) — the throughput collector is the
         # right trade for a batch engine with no latency SLO.
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '20g')} "
-            "-XX:+AlwaysPreTouch -XX:+UseParallelGC",
+            f"-Xms{driver_mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC",
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "32m")
@@ -80,56 +98,15 @@ def get_spark(
         # side is small.
         .config("spark.sql.join.preferSortMergeJoin", "false")
     )
-    # sandbox: shuffle scratch on tmpfs — the VM's virtio disk writeback
-    # stalls dominate shuffle-heavy stages otherwise. On a real cluster
-    # spark.local.dir points at executor-local NVMe instead.
+    # shuffle scratch on tmpfs when the host has one — virtio disk
+    # writeback stalls dominate shuffle-heavy stages on a VM otherwise. On
+    # a real cluster spark.local.dir points at executor-local NVMe instead.
     if os.path.isdir("/dev/shm"):
         builder = builder.config("spark.local.dir", "/dev/shm/spark-scratch")
         # local-cluster worker JVMs resolve scratch from SPARK_LOCAL_DIRS
         # env (it overrides spark.local.dir); export it so executor
         # shuffle files land on tmpfs there too
         os.environ.setdefault("SPARK_LOCAL_DIRS", "/dev/shm/spark-scratch")
-    # local-cluster[k,c,m] (the sandbox's multi-executor emulation — used
-    # by the N-vs-4N-executor scaling protocol): size each executor JVM
-    # explicitly. Round-5 measurement: a SINGLE local[16] JVM under-scales
-    # map stages 3x per-task vs 4 tasks (host-level effect on one process;
-    # GC pauses 0.5 s, bandwidth 28 GB/s available, stack samples all
-    # RUNNABLE in codegen), while 4 separate 4-core executor JVMs on the
-    # same 16 pinned cores run the same stage 2.9x faster — executor-JVM
-    # isolation is both the faithful cluster emulation and the faster one.
-    if master.startswith("local-cluster"):
-        emem = os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "8g")
-        builder = builder.config("spark.executor.memory", emem).config(
-            "spark.executor.extraJavaOptions", "-XX:+UseParallelGC"
-        )
-    # AQE initial shuffle width, GATED ON WORKLOAD SCALE (round-5 A/B).
-    # Corpus-scale aggregates want wide-start exchanges: at 5M docs the
-    # MinHash aggregate (~265M shingle rows) at cores-many initial
-    # partitions divides executor memory across cores-many concurrent
-    # 8M-row hash maps and spills — measured as the 16-core leg LOSING
-    # per-core throughput vs the 4-core leg; 256-wide start bounds
-    # per-task state and AQE coalesces small shuffles back down. But the
-    # wide start is NOT free for sub-second interactive queries: at sf0.1
-    # a 3-row-result chained aggregate (mutual_info_lang_source) pays 2.1x
-    # in 256-task stage waves (interleaved A/B, 12 tries/cell, 0% steal).
-    # Small queries never hit the spill the wide start exists to prevent,
-    # so the default follows shuffle.partitions; corpus-scale runs opt in
-    # via SPARK_GRAFT_INITIAL_PARTS (the in-Spark corpus replication
-    # harness implies it), and cluster deploys set it in spark-submit conf
-    # sized to executor count.
-    # replication >= 100x (40M-turn / multi-M-doc protocol runs) is the
-    # corpus-scale regime where the spill was measured; the x10 bench
-    # replication stays in the interactive regime.
-    ipn = os.environ.get("SPARK_GRAFT_INITIAL_PARTS")
-    if ipn is None and (
-        int(os.environ.get("SPARK_GRAFT_REPLICATE_DOCS", "1")) >= 100
-        or int(os.environ.get("SPARK_GRAFT_REPLICATE", "1")) >= 100
-    ):
-        ipn = "256"
-    if ipn:
-        builder = builder.config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum", ipn
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

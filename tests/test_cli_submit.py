@@ -1,5 +1,6 @@
 """spark-submit --py-files packaging + CLI job tests (north-rule surface)."""
 
+import json
 import os
 import subprocess
 import sys
@@ -371,19 +372,23 @@ def test_cli_catalog_table_sources(spark):
             spark.sql("DROP TABLE IF EXISTS cat_tgt_cli_test")
 
 
+SPARK_SUBMIT = os.path.join(os.path.dirname(sys.executable), "spark-submit")
+
+
 @pytest.mark.slow
 def test_spark_submit_py_files(spark):
     """Real spark-submit with the zip artifact — the packaging contract."""
-    subprocess.run(["sh", os.path.join(REPO, "package.sh")], check=True)
     with tempfile.TemporaryDirectory() as d:
+        zip_path = os.path.join(d, "psdv_spark.zip")
+        subprocess.run(
+            ["sh", os.path.join(REPO, "package.sh"), zip_path], check=True
+        )
         cfg = _write_fixtures(spark, d)
-        env = dict(os.environ)
-        env["SPARK_GRAFT_CPUS"] = "4"
         out = subprocess.run(
             [
-                os.path.join(os.path.dirname(sys.executable), "spark-submit"),
+                SPARK_SUBMIT,
                 "--master", "local[4]",
-                "--py-files", os.path.join(REPO, "dist/psdv_spark.zip"),
+                "--py-files", zip_path,
                 os.path.join(REPO, "jobs/run_validation.py"),
                 "--config", cfg,
                 "--source-path", d + "/src",
@@ -391,11 +396,53 @@ def test_spark_submit_py_files(spark):
             ],
             capture_output=True,
             text=True,
-            env=env,
             timeout=300,
         )
         assert out.returncode == 1, out.stderr[-2000:]
         assert "validation_name" in out.stdout
+
+
+_SESSION_PROBE = """
+import json, os, sys
+sys.path.insert(0, {repo!r})
+from professional_services_data_validator_spark import get_spark
+sc = get_spark("session-probe").sparkContext
+print(json.dumps({{
+    "master": sc.master,
+    "parallelism": sc.defaultParallelism,
+    "cpus": len(os.sched_getaffinity(0)),
+    "driver_memory": sc.getConf().get("spark.driver.memory"),
+    "max_heap": sc._jvm.java.lang.Runtime.getRuntime().maxMemory(),
+}}))
+"""
+
+
+def _probe_session(cmd, env=None):
+    out = subprocess.run(
+        cmd, capture_output=True, text=True, env=env, timeout=300
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+@pytest.mark.slow
+def test_session_master_and_heap_come_from_launcher():
+    """get_spark leaves the master to its launcher: spark-submit's --master
+    wins, plain python gets Spark's local[*] (one task thread per CPU the
+    process may use); SPARK_DRIVER_MEM sizes the heap it launches."""
+    with tempfile.TemporaryDirectory() as d:
+        probe = os.path.join(d, "probe.py")
+        with open(probe, "w") as f:
+            f.write(_SESSION_PROBE.format(repo=REPO))
+        submitted = _probe_session(
+            [SPARK_SUBMIT, "--master", "local[2]", probe]
+        )
+        assert submitted["master"] == "local[2]"
+        env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+        plain = _probe_session([sys.executable, probe], env=env)
+    assert plain["parallelism"] == plain["cpus"]
+    assert plain["driver_memory"] == "1g"
+    assert plain["max_heap"] <= 2**30
 
 
 def test_cli_rate_gate_and_profile_sequence(spark, capsys):

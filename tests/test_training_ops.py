@@ -134,6 +134,20 @@ def test_minhash_lsh_finds_near_dups(spark, sf_dir):
     assert all(r.jaccard > 0.8 for r in pairs if (r.id_a, r.id_b) in expected)
 
 
+def test_jaccard_verify_requires_shingle_source(spark):
+    """Without sh or sh_slicer there is nothing to verify against: a clear
+    ValueError, raised before any Spark job runs."""
+    import pytest
+
+    from professional_services_data_validator_spark.operators.dedup import (
+        jaccard_verify,
+    )
+
+    cand = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
+    with pytest.raises(ValueError, match="provide sh or sh_slicer"):
+        jaccard_verify(cand, None)
+
+
 def test_lsh_no_quadratic_blowup(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     sh = shingles(docs, "doc_id", "text", k=3)
